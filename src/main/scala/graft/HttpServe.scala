@@ -77,8 +77,8 @@ object HttpServe {
     }.mkString("{", ", ", "}")
 
   /** What the server serves: a view plus a VERSION TOKEN. The serving
-    * layer re-resolves `generation` per request (cheap — a directory
-    * listing on the state store, nothing on a static view) and rebuilds
+    * layer re-resolves `generation` per request (cheap — one listing of
+    * the state store's commit log, nothing on a static view) and rebuilds
     * its memoized plan set only when the token moves. On an object store
     * a production deployment would cache the token with a short TTL;
     * the invalidation contract is unchanged.
@@ -94,14 +94,12 @@ object HttpServe {
     def view: DataFrame = v
   }
 
-  /** Live streaming state — the newest complete generation per bucket,
+  /** Live streaming state — the store's newest commit, a whole batch,
     * exactly what [[graft.streaming.BucketedStateStore.read]] serves.
     * The token is [[graft.streaming.BucketedStateStore.currentGenToken]]
-    * (per-bucket-gen SUM), not currentMaxGen: max() reaches its final
-    * value on a batch's FIRST bucket rename, so a request racing the
-    * sequential rename loop could memoize a mixed-generation view under
-    * a token that never moves again; the sum moves on every rename, so
-    * the completing batch invalidates it.
+    * (newest commit + 1). It is read before the view is resolved, so a
+    * commit landing in between pairs a newer view with an older token,
+    * and the next request's token moves past it and rebuilds.
     */
   private final class LiveViewSource(proj: StreamingProjection) extends ViewSource {
     def generation: Long = proj.store.currentGenToken
@@ -457,11 +455,11 @@ object HttpServe {
 
     // Generation-checked swap: one volatile reference; requests in flight
     // keep serving their generation's plans (parquet generation dirs are
-    // immutable, and retention keeps 2 per bucket so ONE generation of
-    // lag reads consistent files), new requests get the new set. A plan
-    // can still outlive retention when 2+ batches land on the same
-    // bucket during one request's collect() (1-second triggers make that
-    // reachable) — `attempt` below covers that residual window by
+    // immutable, and retention keeps the newest two commits' files, so
+    // ONE commit of lag reads consistent files), new requests get the new
+    // set. A plan can still outlive retention when 2+ batches rewrite the
+    // same bucket during one request's collect() (1-second triggers make
+    // that reachable) — `attempt` below covers that residual window by
     // retrying ONCE on a freshly-resolved serving set before failing the
     // request.
     // Per-start lock: servers started in the same JVM must not share a

@@ -1,5 +1,8 @@
 package graft.streaming
 
+import java.io.FileNotFoundException
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -7,9 +10,14 @@ import org.apache.spark.sql.functions._
 import graft.projection.SignalProjection
 
 /** Keyed state table for the streaming projection: hash-bucketed parquet
-  * with per-bucket generations.
+  * generations, published a whole batch at a time by a commit log.
   *
-  * Layout: `dir/bucket=<b>/gen=<batchId>/part-*.parquet`
+  * Layout:
+  *   - `dir/bucket=<b>/gen=<batchId>/part-*.parquet`: bucket b as batch
+  *     batchId rewrote it;
+  *   - `dir/_commits/<N>`: batch N's commit, the generation of every
+  *     bucket that holds data;
+  *   - `dir/_store_manifest`: the layout parameters.
   *
   * Why this shape (the 100 TB design):
   *   - **Incremental merge.** A micro-batch only rewrites the buckets its
@@ -17,17 +25,25 @@ import graft.projection.SignalProjection
   *     With B buckets and a batch touching k keys, at most min(k, B)
   *     buckets are read+rewritten. B scales with state size (config), so
   *     bucket files stay executor-memory-sized.
-  *   - **Idempotent replay = exactly-once.** Generations are named by the
-  *     Structured Streaming batchId. If a batch is replayed after a crash,
-  *     the same gen directory is rewritten and the swap is a no-op
-  *     semantically — the checkpoint + idempotent sink contract
+  *   - **Idempotent replay = exactly-once.** Generations and commits are
+  *     named by the Structured Streaming batchId. A batch replayed after a
+  *     crash rewrites the same gen dirs and the same commit from the
+  *     commit before it — the checkpoint + idempotent sink contract
   *     (strictly stronger than the reference's at-least-once + idempotent
   *     Redis apply, consumer.go:46-51).
-  *   - **Readers never block.** A query reads the latest complete
-  *     generation per bucket; an in-flight merge writes to a staging dir
-  *     and renames (the classic HDFS commit pattern; on object stores or
-  *     for multi-writer setups this slot is where a table format like
-  *     Delta/Iceberg would plug in).
+  *   - **Readers see whole batches and never block.** A merge stages its
+  *     output, renames each touched bucket's new generation into place,
+  *     and only then writes `_commits/N` (temp + rename). Readers resolve
+  *     every path from one commit, so a read racing a commit sees batch
+  *     N-1 or batch N in full, never a mix — the per-batch atomicity of
+  *     the reference's one-transaction Redis apply. Structured Streaming's
+  *     own `offsets/`+`commits/` logs and Delta's `_delta_log` are the
+  *     same design; this slot is where such a table format would plug in.
+  *   - **Retention.** The newest two commits are kept, with every gen dir
+  *     they reference, so [[readAt]] serves any generation from the older
+  *     of the two on. Older commit files are deleted once the new commit
+  *     is durable; a bucket's unreferenced generations are deleted the
+  *     next time a commit rewrites that bucket.
   *
   * Tombstones (action='deleted') are retained in state so late replays of
   * older events cannot resurrect deleted keys; [[compact]] drops them once
@@ -68,10 +84,9 @@ class BucketedStateStore(
     * keys across two bucket sets — merge never reads the old copy,
     * read() unions and serves BOTH rows, and a tombstone can only ever
     * hide one of them. The manifest is stamped on the store's first
-    * write (temp + rename, the `_dropped` marker discipline) and every
-    * instance validates against it ONCE before its first read or merge;
-    * a mismatch fails loudly with the original parameters in the
-    * message.
+    * write (temp + rename, like the commits) and every instance
+    * validates against it ONCE before its first read or merge; a
+    * mismatch fails loudly with the original parameters in the message.
     *
     * Pre-manifest dirs (older checkpoints) get an EXPLICIT adoption gate
     * (r16 ADVICE: the r16 form silently stamped the OPENING instance's
@@ -95,8 +110,7 @@ class BucketedStateStore(
     val mp = manifestPath
     if (fs.exists(mp)) {
       val in = fs.open(mp)
-      val got = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim
+      val got = try new String(in.readAllBytes(), UTF_8).trim
       finally in.close()
       require(got == manifestDesc,
         s"state dir $dir was written with [$got] but opened with " +
@@ -155,8 +169,7 @@ class BucketedStateStore(
   private def stampManifest(): Unit = {
     val tmp = new Path(root, "_store_manifest.tmp")
     val out = fs.create(tmp, true)
-    try out.write(manifestDesc.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
+    try out.write(manifestDesc.getBytes(UTF_8))
     finally out.close()
     if (fs.rename(tmp, manifestPath)) manifestOk = true
     else {
@@ -165,9 +178,8 @@ class BucketedStateStore(
       // case the manifest now exists and re-validating it terminates.
       // Any other cause must fail loudly here — recursing while the
       // manifest is still absent would re-enter the adoption branch and
-      // this method forever (review finding: the r18 refactor's
-      // adoption-path stamp closed that loop; the exists() guard is the
-      // termination proof).
+      // this method forever (the exists() guard is the termination
+      // proof).
       require(fs.exists(manifestPath),
         s"could not stamp layout manifest $manifestPath (rename returned " +
           "false and no concurrent stamp exists)")
@@ -177,91 +189,107 @@ class BucketedStateStore(
 
   private def bucketPath(b: Long): Path = new Path(root, s"bucket=$b")
   private def genPath(b: Long, g: Long): Path = new Path(bucketPath(b), s"gen=$g")
+  private def commitsPath = new Path(root, "_commits")
+  private def commitPath(n: Long): Path = new Path(commitsPath, n.toString)
 
-  private def listGens(b: Long): Seq[Long] = {
-    val bp = bucketPath(b)
-    if (!fs.exists(bp)) Seq.empty
-    else fs.listStatus(bp).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen="))
-      .map(_.getPath.getName.stripPrefix("gen=").toLong)
+  /** The numbers n of `p`'s entries named `<prefix>n`, ascending: one
+    * listing. `absent` answers for a `p` that does not exist.
+    */
+  private def numbered(p: Path, prefix: String,
+      absent: => Seq[Long] = Seq.empty): Seq[Long] = {
+    val Numbered = (java.util.regex.Pattern.quote(prefix) + "(\\d+)").r
+    try fs.listStatus(p).toSeq.map(_.getPath.getName)
+      .collect { case Numbered(n) => n.toLong }.sorted
+    catch { case _: FileNotFoundException => absent }
   }
 
-  private def latestGenPaths(
-      buckets: Seq[Long], maxGen: Long = Long.MaxValue): Seq[String] =
-    buckets.flatMap { b =>
-      val gens = listGens(b).filter(_ <= maxGen)
-      if (gens.isEmpty) None
-      else {
-        // skip generations emptied by compaction (no data files)
-        val p = genPath(b, gens.max)
-        val hasData = fs.listStatus(p).exists(_.getPath.getName.startsWith("part-"))
-        if (hasData) Some(p.toString) else None
-      }
-    }
+  private def allBuckets: Seq[Long] = numbered(root, "bucket=")
 
-  private def allBuckets: Seq[Long] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-      .map(_.getPath.getName.stripPrefix("bucket=").toLong)
+  /** Commit `id` of the log: the generation of every bucket that holds
+    * data, the store's first commit (readAt below it is empty, not aged
+    * out) and whether [[compact]] wrote it. Stored as text: `first`, plus
+    * ` compact` for a compaction, then one `bucket gen` line each.
+    */
+  private case class Commit(id: Long, first: Long, gens: Map[Long, Long],
+      compacted: Boolean = false) {
+    def only(buckets: Seq[Long]): Map[Long, Long] = gens.filter(kv => buckets.contains(kv._1))
+  }
+
+  /** Committed batch ids, ascending: one listing of `_commits`. A dir
+    * written before the commit log has no `_commits` and is adopted here.
+    */
+  private def commitIds(): Seq[Long] = {
+    checkManifest(stampIfAbsent = false)
+    numbered(commitsPath, "", absent = adoptLegacy())
+  }
+
+  /** Adopt a dir written before the commit log. Its newest generation N
+    * may be a batch its checkpoint never committed, so a replay of N must
+    * find the state before N: adoption commits both N and the generation
+    * below it, each as the map the old per-bucket readers served at that
+    * generation (each bucket's newest generation at or below it, when
+    * that generation holds data). Both land in one directory rename.
+    * Older history is unknown, so [[readAt]] below them is unservable.
+    */
+  private def adoptLegacy(): Seq[Long] = {
+    val gens = allBuckets.map(b => b -> numbered(bucketPath(b), "gen="))
+    def servedAt(g: Long): Commit = Commit(g, first = 0L, gens.flatMap { case (b, gs) =>
+      gs.takeWhile(_ <= g).lastOption.filter(bg =>
+        fs.listStatus(genPath(b, bg)).exists(_.getPath.getName.startsWith("part-"))).map(b -> _)
+    }.toMap)
+    val adopted = gens.flatMap(_._2).distinct.sorted.takeRight(2)
+    if (adopted.nonEmpty) {
+      val log = new Path(root, "_commits.adopting")
+      fs.delete(log, true)
+      adopted.foreach(g => writeCommit(servedAt(g), replay = false, log))
+      require(fs.rename(log, commitsPath), s"rename $log -> $commitsPath failed")
+    }
+    adopted
+  }
+
+  private def readCommit(n: Long): Commit = {
+    val in = fs.open(commitPath(n))
+    val lines = try new String(in.readAllBytes(), UTF_8).linesIterator.toSeq
+      finally in.close()
+    val head = lines.head.split(' ')
+    Commit(n, head(0).toLong,
+      lines.tail.map(_.split(' ')).map(bg => bg(0).toLong -> bg(1).toLong).toMap,
+      compacted = head.length > 1)
+  }
+
+  private def writeCommit(c: Commit, replay: Boolean, log: Path = commitsPath): Unit = {
+    val tmp = new Path(log, s"${c.id}.tmp")
+    val out = fs.create(tmp, true)
+    val head = c.first.toString + (if (c.compacted) " compact" else "")
+    try out.write((head +: c.gens.toSeq.sorted.map { case (b, g) => s"$b $g" })
+      .mkString("", "\n", "\n").getBytes(UTF_8))
+    finally out.close()
+    val dst = new Path(log, c.id.toString)
+    if (replay) fs.delete(dst, false)
+    require(fs.rename(tmp, dst), s"rename $tmp -> $dst failed")
+  }
 
   /** Current state (tombstones included); None if no state yet. */
-  def read(): Option[DataFrame] = {
-    checkManifest(stampIfAbsent = false)
-    readBuckets(allBuckets)
-  }
+  def read(): Option[DataFrame] = readAt(Long.MaxValue)
 
-  /** TIME-TRAVEL read: state as of generation `maxGen` (inclusive) —
-    * each bucket serves its newest generation ≤ maxGen; buckets first
-    * touched later have no state yet and contribute nothing. This is
-    * what the per-bucket generation layout buys beyond idempotent
-    * replay: any still-retained batch boundary is a consistent snapshot
-    * (the Delta/Iceberg version-read analog), bounded by the retention
-    * window (2 generations/bucket here; production sizes retention to
-    * its audit horizon).
-    *
-    * FAILS LOUDLY when the snapshot has aged out: a bucket whose needed
-    * generation was deleted by retention is indistinguishable from one
-    * first touched later by directory listing alone, and silently
-    * skipping it would return a cross-epoch mix. Retention therefore
-    * records each bucket's first-dropped generation (`_dropped` marker,
-    * written once = the minimum ever dropped); if a bucket has no
-    * retained generation ≤ maxGen but DID drop one ≤ maxGen, the
-    * snapshot is unservable and this throws instead of lying.
+  /** TIME-TRAVEL read: state as of generation `maxGen` (inclusive), served
+    * from the newest commit ≤ maxGen — a whole-batch snapshot (the
+    * Delta/Iceberg version-read analog). The window is the newest two
+    * commits (production sizes retention to its audit horizon). Below the
+    * oldest retained commit the answer is None when the store had no
+    * commit yet at `maxGen`; otherwise that snapshot was deleted by
+    * retention and this throws instead of serving a newer one.
     */
   def readAt(maxGen: Long): Option[DataFrame] = {
-    checkManifest(stampIfAbsent = false)
-    // ONE listing per bucket (r16 review finding: the aged-out guard and
-    // latestGenPaths each listed every bucket — doubled metadata RPCs on
-    // an object store): the guard decision and the served path come from
-    // the same listGens result.
-    val paths = allBuckets.flatMap { b =>
-      val eligible = listGens(b).filter(_ <= maxGen)
-      if (eligible.isEmpty) {
-        val marker = new Path(bucketPath(b), "_dropped")
-        if (fs.exists(marker)) {
-          val in = fs.open(marker)
-          val minDropped =
-            try new String(in.readAllBytes(),
-              java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-            finally in.close()
-          if (minDropped <= maxGen)
-            throw new IllegalStateException(
-              s"readAt($maxGen): bucket $b's generation <= $maxGen was " +
-                s"deleted by retention (oldest dropped: $minDropped) — " +
-                "the snapshot is no longer servable; raise retention or " +
-                "read a newer generation")
-        }
-        None
-      } else {
-        // skip generations emptied by compaction (no data files)
-        val p = genPath(b, eligible.max)
-        val hasData =
-          fs.listStatus(p).exists(_.getPath.getName.startsWith("part-"))
-        if (hasData) Some(p.toString) else None
-      }
+    val ids = commitIds()
+    ids.takeWhile(_ <= maxGen).lastOption.map(readCommit) match {
+      case Some(c) => readPaths(c.gens)
+      case None if ids.isEmpty || maxGen < readCommit(ids.head).first => None
+      case None => throw new IllegalStateException(
+        s"readAt($maxGen): the commit for generation $maxGen was deleted by " +
+          s"retention (oldest retained commit: ${ids.head}) — the snapshot " +
+          "is no longer servable; raise retention or read a newer generation")
     }
-    if (paths.isEmpty) None else Some(readWithSchema(paths))
   }
 
   /** The store's data-file schema, memoized per instance (r19, guide
@@ -275,25 +303,34 @@ class BucketedStateStore(
     */
   @volatile private var knownSchema: Option[org.apache.spark.sql.types.StructType] = None
 
-  private def readWithSchema(paths: Seq[String]): DataFrame =
-    knownSchema match {
-      case Some(sc) => spark.read.schema(sc).parquet(paths: _*)
-      case None =>
-        val df = spark.read.parquet(paths: _*)
-        knownSchema = Some(df.schema)
-        df
+  /** Read the given bucket → generation dirs; None if there are none. */
+  private def readPaths(gens: Map[Long, Long]): Option[DataFrame] =
+    if (gens.isEmpty) None
+    else {
+      val paths = gens.toSeq.sorted.map { case (b, g) => genPath(b, g).toString }
+      val df = knownSchema.fold(spark.read)(sc => spark.read.schema(sc)).parquet(paths: _*)
+      if (knownSchema.isEmpty) knownSchema = Some(df.schema)
+      Some(df)
     }
 
-  private def readBuckets(buckets: Seq[Long]): Option[DataFrame] = {
-    val paths = latestGenPaths(buckets)
-    if (paths.isEmpty) None else Some(readWithSchema(paths))
-  }
-
-  /** Merge one micro-batch (already reduced to per-key latest) into state.
-    * Only buckets containing batch keys are read and rewritten.
+  /** Merge one micro-batch (already reduced to per-key latest) into state
+    * as generation `gen`. Only buckets containing batch keys are read and
+    * rewritten. `gen` equal to the newest commit is a replay of that batch:
+    * it folds into the commit before it, never into its own output.
     */
   def merge(batchLatest: DataFrame, gen: Long): Unit = {
-    checkManifest(stampIfAbsent = false)
+    val ids = commitIds()
+    val newest = ids.lastOption.map(readCommit)
+    newest.foreach { c =>
+      require(c.id <= gen,
+        s"merge(gen=$gen) is older than the newest commit (${c.id}) of " +
+          s"$dir. Likely cause: the state dir is reused under a fresh " +
+          "checkpoint, which restarts batch ids at 0. Resume the checkpoint " +
+          "that wrote this store, or give the new checkpoint a fresh state dir")
+      require(!(c.id == gen && c.compacted),
+        s"merge(gen=$gen) would replace the compaction commit $gen of $dir; " +
+          "resume the stream with batch ids above the gen compact() returned")
+    }
     val withBucket = batchLatest.withColumn("_bucket", bucketOf(col(key)))
     // Tiny driver-side collect: at most numBuckets longs (config-bounded,
     // scale-independent) — not a data collect.
@@ -303,12 +340,10 @@ class BucketedStateStore(
     }
     if (affected.isEmpty) return
 
-    val oldState = diag("merge.read-old")(readBuckets(affected))
+    val base = if (newest.exists(_.id == gen)) ids.init.lastOption.map(readCommit) else newest
+    val oldState = diag("merge.read-old")(base.flatMap(c => readPaths(c.only(affected))))
       .map(_.withColumn("_bucket", bucketOf(col(key))))
-    val combined = oldState match {
-      case Some(old) => old.unionByName(withBucket)
-      case None => withBucket
-    }
+    val combined = oldState.fold(withBucket)(_.unionByName(withBucket))
     // ONE exchange per merge, not two (r18, guide §2.1): repartition to
     // the bucket layout the write needs FIRST, then fold grouped by
     // (_bucket, key) — _bucket is a function of the key, so the fold is
@@ -321,15 +356,16 @@ class BucketedStateStore(
       combined.repartition(numBuckets, col("_bucket")), key, seq,
       alsoGroup = Seq("_bucket"))
     diag("merge.write-buckets")(
-      writeBuckets(merged, affected, gen, prePartitioned = true))
+      commitBatch(merged, affected, gen, ids, base, compaction = false))
   }
 
-  /** Write `data` (carrying a `_bucket` column) as generation `gen` of
-    * every bucket in `affected` — buckets with no rows get an empty
-    * generation, which supersedes (hides) their older data.
+  /** Publish `data` (carrying a `_bucket` column) as batch `gen`: stage
+    * it, rename each `affected` bucket's new generation into place, then
+    * write `_commits/gen` — `base`'s map with the affected buckets
+    * replaced; a bucket left without rows drops out — and apply retention.
     */
-  private def writeBuckets(data: DataFrame, affected: Seq[Long], gen: Long,
-      prePartitioned: Boolean = false): Unit = {
+  private def commitBatch(data: DataFrame, affected: Seq[Long], gen: Long,
+      ids: Seq[Long], base: Option[Commit], compaction: Boolean): Unit = {
     val staging = new Path(root, s"_staging_gen_$gen")
     fs.delete(staging, true)
     // co-locate each bucket into one task before the partitioned write:
@@ -340,156 +376,104 @@ class BucketedStateStore(
     // parallelism (r18 ADVICE: the one-exchange merge repartitions to
     // numBuckets before the fold, so a small-numBuckets store folds on
     // few tasks; size B to state volume AND the cores a merge should use).
-    // `prePartitioned` callers (merge) already hold exactly this layout —
-    // re-shuffling it here would undo the one-exchange plan they built.
-    val laid = if (prePartitioned) data
-      else data.repartition(numBuckets, col("_bucket"))
+    // merge already holds exactly this layout — re-shuffling it here would
+    // undo the one-exchange plan it built.
+    val laid = if (compaction) data.repartition(numBuckets, col("_bucket"))
+      else data
     diag("write.staging-job")(
       laid.write.partitionBy("_bucket").parquet(staging.toString))
     // The staged data files carry exactly this schema minus the partition
     // column — seed the read-path memo so the NEXT merge skips footer
-    // inference (see [[readWithSchema]]).
+    // inference (see [[readPaths]]).
     if (knownSchema.isEmpty)
       knownSchema = Some(org.apache.spark.sql.types.StructType(
         data.schema.fields.filterNot(_.name == "_bucket")))
 
     // Stamp/validate the layout manifest once the root exists (the
-    // staging write above created it on a fresh store).
+    // staging write above created it on a fresh store). A fresh store's
+    // `_commits` dir exists before its first bucket rename, so a crash
+    // before the first commit reads as empty, never as a legacy dir.
     checkManifest(stampIfAbsent = true)
+    if (ids.isEmpty) fs.mkdirs(commitsPath)
 
-    // Commit each bucket's generation. The per-bucket sequence
-    // (delete → verify-gone → rename → retention) is the exactly-once
-    // contract and is UNCHANGED; buckets touch disjoint paths, so the
-    // commits run CONCURRENTLY (r19, guide §2.1 applied to metadata:
-    // on an object store each bucket costs a handful of RPC round
-    // trips, and serializing B buckets multiplies that latency by B —
-    // bounded pool, failures propagate and fail the batch exactly like
-    // the sequential loop did).
-    diag("write.commit-loop")(forEachConcurrently(affected)(commitBucket(_, staging, gen)))
+    // Buckets touch disjoint paths, so their renames run CONCURRENTLY (on
+    // an object store each costs a few RPC round trips; serializing B of
+    // them multiplies that latency by B). Until the commit below, no
+    // reader resolves these paths.
+    val staged = numbered(staging, "_bucket=")
+    diag("write.commit-loop")(
+      forEachConcurrently(staged)(renameBucket(_, staging, gen)))
+    val commit = Commit(gen, base.fold(gen)(_.first),
+      base.fold(Map.empty[Long, Long])(_.gens) -- affected ++ staged.map(_ -> gen),
+      compaction)
+    writeCommit(commit, replay = ids.contains(gen))
     fs.delete(staging, true)
+
+    // Retention, only now that the new commit is durable: keep it and
+    // `base`, drop older commit files, and delete the rewritten buckets'
+    // generations neither of the two references.
+    ids.takeWhile(_ < base.fold(gen)(_.id)).foreach(n => fs.delete(commitPath(n), false))
+    forEachConcurrently(affected) { b =>
+      val keep = Set(base.flatMap(_.gens.get(b)), commit.gens.get(b)).flatten
+      numbered(bucketPath(b), "gen=").filterNot(keep).foreach(g => fs.delete(genPath(b, g), true))
+    }
   }
 
-  /** One bucket's generation commit — the exactly-once sequence
-    * extracted verbatim from the r16-r18 sequential loop (see the inline
-    * comments for each step's failure-mode rationale).
-    */
-  private def commitBucket(b: Long, staging: Path, gen: Long): Unit = {
+  /** Move one bucket's staged output to its generation dir. */
+  private def renameBucket(b: Long, staging: Path, gen: Long): Unit = {
     val src = new Path(staging, s"_bucket=$b")
     val dst = genPath(b, gen)
     fs.delete(dst, true) // idempotent replay of the same batchId
     // fs.delete reports failure by returning FALSE like rename below;
     // renaming into a still-existing dst is the nastier failure — HDFS
     // then moves src INSIDE dst (gen=N/_bucket=b/part-*), whose
-    // underscore dir is invisible to Spark and to the part- hasData
-    // check, so the generation reads EMPTY and supersedes the bucket's
-    // older data: a silent wipe. Verify the target is gone before
-    // renaming (r16 review finding).
+    // underscore dir is invisible to Spark, so the committed generation
+    // would read EMPTY: a silent wipe. Verify the target is gone first.
     require(!fs.exists(dst),
       s"could not delete existing $dst for idempotent replay — failing " +
         "the batch so the checkpoint retries instead of committing an " +
         "empty generation")
     fs.mkdirs(dst.getParent)
-    // ONE listing per bucket per commit (r19): the retention decision
-    // below needs this bucket's generation set AFTER the rename, which
-    // is exactly (pre-rename gens ∪ {gen}) — the rename adds gen and
-    // the delete above removed any stale copy of it — so list BEFORE
-    // the rename and derive, instead of a second listStatus after.
-    val oldGens = listGens(b).filter(_ != gen)
-    if (fs.exists(src)) {
-      // Hadoop FileSystems report most rename failures by returning
-      // FALSE (quota, concurrent delete, S3A copy failure) — not by
-      // throwing. Swallowing it would let foreachBatch commit the
-      // batchId with the generation never created: a silent
-      // exactly-once violation readers can't detect. Fail the batch
-      // so the checkpoint retries it.
-      require(fs.rename(src, dst), s"rename $src -> $dst failed")
-    } else fs.mkdirs(dst) // bucket emptied (e.g. by compaction)
-    // retain only the 2 newest generations per bucket; record the FIRST
-    // drop (the minimum ever, since oldest go first) so readAt can fail
-    // loudly on aged-out snapshots instead of silently skipping.
-    // Marker commit is write-temp-then-rename: a crash mid-write must
-    // not leave an empty marker that turns readAt's diagnostic into a
-    // NumberFormatException.
-    val dropped = (oldGens :+ gen).sorted.dropRight(2)
-    dropped.headOption.foreach { g0 =>
-      val marker = new Path(bucketPath(b), "_dropped")
-      // The marker is written once and never deleted — memoize its
-      // existence per instance so steady-state batches skip the probe.
-      if (!markerKnown.contains(b) && !fs.exists(marker)) {
-        val tmp = new Path(bucketPath(b), "_dropped.tmp")
-        val out = fs.create(tmp, true)
-        try out.write(g0.toString.getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        require(fs.rename(tmp, marker), s"rename $tmp -> $marker failed")
-      }
-      markerKnown.add(b)
-      ()
-    }
-    dropped.foreach(g => fs.delete(genPath(b, g), true))
+    // Hadoop FileSystems report most rename failures by returning
+    // FALSE (quota, concurrent delete, S3A copy failure) — not by
+    // throwing. Swallowing it would let the commit reference a
+    // generation that was never created. Fail the batch so the
+    // checkpoint retries it.
+    require(fs.rename(src, dst), s"rename $src -> $dst failed")
   }
-
-  /** Buckets whose `_dropped` retention marker is known to exist (it is
-    * write-once) — saves one FS probe per bucket per steady-state batch.
-    */
-  private val markerKnown =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
 
   /** Run `body` over the buckets on a bounded pool; any failure
-    * propagates (unwrapped) and fails the batch, preserving the
-    * sequential loop's abort semantics. Single-element and empty inputs
-    * stay on the calling thread.
+    * propagates (unwrapped) and fails the batch.
+    * Single-element and empty inputs stay on the calling thread.
     */
-  private def forEachConcurrently(buckets: Seq[Long])(body: Long => Unit): Unit = {
-    val par = math.min(buckets.size, 8)
-    if (par <= 1) buckets.foreach(body)
+  private def forEachConcurrently(buckets: Seq[Long])(body: Long => Unit): Unit =
+    if (buckets.size <= 1) buckets.foreach(body)
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
-      try {
-        val futs = buckets.map(b => pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = body(b)
-        }))
-        futs.foreach { f =>
-          try f.get()
-          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-        }
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(buckets.size, 8))
+      try buckets.map(b => pool.submit[Unit](() => body(b))).foreach { f =>
+        try f.get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
       } finally pool.shutdown()
     }
-  }
 
-  /** Newest generation across all buckets; -1 if the store is empty. */
-  def currentMaxGen: Long =
-    allBuckets.flatMap(listGens).foldLeft(-1L)(math.max)
+  /** Newest commit; -1 if the store is empty. */
+  def currentMaxGen: Long = commitIds().lastOption.getOrElse(-1L)
 
-  /** Version TOKEN for serving-layer cache invalidation: the SUM over
-    * buckets of (newest generation + 1). [[currentMaxGen]] is wrong for
-    * that job — a multi-bucket batch renames bucket dirs sequentially,
-    * and max() already reaches its final value on the FIRST rename, so a
-    * reader racing the batch could cache a mixed view under a token that
-    * never moves again. The sum moves with EVERY bucket rename.
-    *
-    * The +1 per bucket (r16 review finding): with the raw gen sum, an
-    * EMPTY store (no buckets, token 0) and the store right after
-    * micro-batch 0 (every touched bucket's max gen = the batchId 0,
-    * token 0) were indistinguishable — a server whose first request
-    * cached the empty view before batch 0 committed would keep serving
-    * it until batch 1; and a bucket dir created by mkdirs before its
-    * first rename contributed −1, letting the token transiently DECREASE
-    * into a collision with a pre-batch value. With +1: empty store = 0,
-    * any committed generation ≥ 1, a gen-less bucket dir contributes 0 —
-    * the token strictly increases with every completed rename.
+  /** Version token for serving-layer cache invalidation: newest commit + 1,
+    * 0 when the store is empty. One listing; a commit publishes a whole
+    * batch, so the token moves exactly when the served state does.
     */
-  def currentGenToken: Long =
-    allBuckets.map(b => listGens(b).foldLeft(-1L)(math.max) + 1).sum
+  def currentGenToken: Long = currentMaxGen + 1
 
   /** Drop tombstones older than `horizonSeq` (log-compaction analog),
     * writing the compacted buckets as generation `currentMaxGen + 1` —
     * the only gen that supersedes every existing one WITHOUT shadowing
     * future `merge(batchId)` writes. Returns the gen readers should
-    * treat as current (resume the stream with batchIds above it): the
-    * new gen if any bucket was rewritten, else the unchanged max (a
-    * tombstone-free store compacts to a no-op — no empty generation
-    * churn).
+    * treat as current (resume the stream with batchIds above it; the
+    * commit is marked as a compaction, so a merge at its gen is refused
+    * rather than taken for a replay): the new gen if any bucket was
+    * rewritten, else the unchanged max (a tombstone-free store compacts
+    * to a no-op — no empty commit churn).
     */
   def compact(horizonSeq: Long): Long = {
     val g = currentMaxGen + 1
@@ -498,30 +482,28 @@ class BucketedStateStore(
 
   /** Drop tombstones older than `horizonSeq` (log-compaction analog).
     * BUCKET-SELECTIVE: only buckets that actually hold a pre-horizon
-    * tombstone are read and rewritten — untouched buckets keep their
-    * current generation files verbatim (readers always take the newest
-    * generation per bucket, so serving mixed generations is the normal
-    * read path — the same property `readAt` proves). At 100× state size
-    * a compaction epoch therefore costs O(buckets-with-old-tombstones),
+    * tombstone are read and rewritten — the new commit keeps every other
+    * bucket's current generation files verbatim. At 100× state size a
+    * compaction epoch therefore costs O(buckets-with-old-tombstones),
     * not O(total state). Returns the rewritten bucket ids.
     *
     * The rewrite is deliberately not `merge`, which can only upsert: a
     * merge would resurrect the tombstones from the old generation it
     * unions with.
     *
-    * `gen` must be strictly newer than every existing generation (readers
-    * serve the newest gen per bucket, so anything else would be a no-op
-    * shadowed by current state) and finite: a sentinel like Long.MaxValue
-    * would permanently shadow every later merge(batchId) — and retention
-    * keeps the top-2 gens, so the wedge would never age out. Prefer the
-    * 1-arg overload, which derives the successor gen itself.
+    * `gen` must be strictly newer than the newest commit and finite: a
+    * sentinel like Long.MaxValue would refuse every later
+    * merge(batchId). Prefer the 1-arg overload, which derives the
+    * successor gen itself.
     */
   def compact(horizonSeq: Long, gen: Long): Seq[Long] = {
-    val cur = currentMaxGen
+    val ids = commitIds()
+    val base = ids.lastOption.map(readCommit)
+    val cur = base.fold(-1L)(_.id)
     require(gen > cur && gen < Long.MaxValue,
       s"compact gen=$gen must be a finite generation newer than the " +
         s"current max ($cur); use compact(horizonSeq) to derive it")
-    read() match {
+    base.flatMap(c => readPaths(c.gens)) match {
       case None => Seq.empty
       case Some(st) =>
         // Tombstone compaction is a SIGNAL-schema operation on an
@@ -546,11 +528,10 @@ class BucketedStateStore(
           .select(bucketOf(col(key)).as("_bucket")).distinct()
           .collect().map(_.getLong(0)).toSeq.sorted
         if (affected.nonEmpty) {
-          val kept = readBuckets(affected).get
-            .where(!(col("action") === graft.domain.SignalSchema.Deleted &&
-              col(seq) < horizonSeq))
+          val kept = readPaths(base.get.only(affected)).get
+            .where(!(tombstone && col(seq) < horizonSeq))
             .withColumn("_bucket", bucketOf(col(key)))
-          writeBuckets(kept, affected, gen)
+          commitBatch(kept, affected, gen, ids, base, compaction = true)
         }
         affected
     }

@@ -613,10 +613,10 @@ object StreamingPack extends QueryPack {
       val horizon = DerivedSignalLog.log(s, dir)
         .agg(max(col("seq"))).head().getLong(0) / 2
       // Compaction generation derived by the store (currentMaxGen + 1):
-      // strictly newer than any replay batchId so readers pick it up,
-      // but finite — a MaxValue sentinel would permanently shadow every
-      // later merge — and the per-bucket 2-generation retention then
-      // ages the pre-compaction state out.
+      // strictly newer than any replay batchId so its commit is the one
+      // readers resolve, but finite — a MaxValue sentinel would refuse
+      // every later merge — and the two-commit retention then ages the
+      // pre-compaction state out.
       proj.store.compact(horizon)
       proj.store.read()
         .getOrElse(sys.error("s13: no state written"))
@@ -681,18 +681,18 @@ object StreamingPack extends QueryPack {
         .orderBy("doc_id")
     }),
 
-    // s15: TIME-TRAVEL state read — what the per-bucket generation layout
-    // buys beyond idempotent replay: any retained batch boundary is a
+    // s15: TIME-TRAVEL state read — what the store's commit log buys
+    // beyond idempotent replay: any retained batch boundary is a
     // consistent snapshot (the Delta/Iceberg version-read analog). The
     // log replays through the s1 projection in two micro-batches (the
     // parity wire: odd seqs in batch 0, even in batch 1), then the view
-    // is read AS OF generation 0 — per bucket, the newest generation ≤ 0;
-    // buckets first touched by batch 1 have no snapshot and contribute
-    // nothing. The oracle folds ONLY the odd-seq half: the snapshot must
-    // equal the projection of exactly the events consumed by that batch,
-    // proving generations are batch-consistent, not merely replayable.
-    // Retention bounds how far back readAt reaches (2 gens/bucket here;
-    // production sizes retention to its audit horizon).
+    // is read AS OF generation 0 — commit 0's bucket map; buckets first
+    // touched by batch 1 are not in it and contribute nothing. The oracle
+    // folds ONLY the odd-seq half: the snapshot must equal the projection
+    // of exactly the events consumed by that batch, proving generations
+    // are batch-consistent, not merely replayable. Retention bounds how
+    // far back readAt reaches (the newest two commits here; production
+    // sizes retention to its audit horizon).
     "s15_state_time_travel" -> ((s, dir) => {
       val tmp = scratch("graft-s15-")
       val wire = stagedLateWire(s, dir) // (seq, ets, value): ets unused here

@@ -196,21 +196,28 @@ object ServeLatency {
     println(calmLine)
 
     // ---- phase 2: under sustained ingest — feeder appends 1 file/s ----
-    val watch = s"$root/watch"
-    new java.io.File(watch).mkdirs()
-    val q2 = proj.run(graft.sources.FileEventSource(watch, maxFilesPerTrigger = 4),
-      s"$root/chk2",
+    // The stream resumes q1's checkpoint over the same log, so batch ids
+    // continue past the store's commits. Each feed file is copied next to
+    // the log, then moved in atomically: a trigger never lists a
+    // half-written file.
+    val q2 = proj.run(graft.sources.FileEventSource(inDir, maxFilesPerTrigger = 4),
+      s"$root/chk",
       org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"))
     val feedStop = new AtomicBoolean(false)
     val feeder = new Thread(() => {
       val slots = new java.io.File(feedSrc).listFiles()
         .filter(_.getName.startsWith("slot=")).sortBy(_.getName)
+      val landing = java.nio.file.Files.createDirectories(
+        java.nio.file.Paths.get(root, "landing"))
       var k = 0
       while (!feedStop.get() && k < slots.length) {
         slots(k).listFiles().filter(_.getName.endsWith(".json"))
           .zipWithIndex.foreach { case (f, j) =>
-            java.nio.file.Files.copy(f.toPath,
-              java.nio.file.Paths.get(watch, s"feed-$k-$j.json"))
+            val name = s"feed-$k-$j.json"
+            java.nio.file.Files.move(
+              java.nio.file.Files.copy(f.toPath, landing.resolve(name)),
+              java.nio.file.Paths.get(inDir, name),
+              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
           }
         k += 1
         Thread.sleep(1000)

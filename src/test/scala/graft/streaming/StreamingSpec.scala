@@ -44,6 +44,18 @@ class StreamingSpec extends SparkSuite {
     assert(first == second)
   }
 
+  test("a merge older than the newest commit is refused: a state dir reused under a fresh checkpoint") {
+    val dir = tmp()
+    val store = new BucketedStateStore(spark, dir, numBuckets = 4)
+    val batch = SignalProjection.latestByKey(SignalProjection.decode(rawEvents))
+    store.merge(batch, gen = 5L)
+    // a fresh checkpoint restarts batch ids at 0
+    val e = intercept[IllegalArgumentException](store.merge(batch, gen = 0L))
+    assert(e.getMessage.contains("fresh checkpoint"), e.getMessage)
+    assert(store.currentMaxGen == 5L)
+    store.merge(batch, gen = 5L) // the replay of the newest batch is still allowed
+  }
+
   test("incremental merges apply LWW and deletes across batches") {
     val dir = tmp()
     val store = new BucketedStateStore(spark, dir, numBuckets = 4)
